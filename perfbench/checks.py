@@ -31,44 +31,88 @@ def _oracle_tools(root: str):
     return mod
 
 
-class QueryChecker:
-    """Checks contract-query results (as Arrow tables)."""
+def oracle_answers(root: str, data_dir: str, oracle_sql: dict[str, str]) -> dict:
+    """{key: {"cols": sorted column names, "rows": canonical rowset}} of
+    each key's DuckDB twin over the parquet tables in ``data_dir``."""
+    import duckdb
 
-    def __init__(self, root: str, data_dir: str, oracle_sql: dict[str, str],
+    tools = _oracle_tools(root)
+    con = duckdb.connect()
+    for t in ("region nation customer supplier part orders lineitem "
+              "events documents embeddings").split():
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{data_dir}/{t}.parquet')"
+        )
+    out = {}
+    for key, sql in oracle_sql.items():
+        d = con.execute(sql).arrow()
+        out[key] = {"cols": sorted(d.column_names),
+                    "rows": tools.rowset(list(d.column_names),
+                                         tools._arrow_rows(d))}
+    con.close()
+    return out
+
+
+def lsh_answer(root: str, data_dir: str, exact_sql: str,
+               tables: int, bits: int, dim: int, seed: int) -> dict:
+    """The answer of ``q_dedup_embed_lsh``'s DuckDB twin, without its
+    ~20 ms per vector: the exact twin's pairs (``exact_sql``, the
+    ``q_dedup_embed`` oracle, whose cosine is the same expression) that
+    share a bucket in at least one LSH table.  Buckets are the sign bits
+    against the same fixed-seed hyperplanes the twin inlines.  The smoke
+    test checks that this equals the twin's own answer."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from snowav_spark.ops import similarity
+
+    tools = _oracle_tools(root)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{data_dir}/embeddings.parquet')")
+    exact = con.execute(exact_sql).arrow()
+    con.close()
+    emb = pq.read_table(f"{data_dir}/embeddings.parquet",
+                        columns=["vec_id", "embedding"])
+    ids = emb.column("vec_id").to_numpy()
+    vecs = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
+    planes = np.array(similarity.random_hyperplanes(tables, bits, dim, seed))
+    # (vectors, tables): each table's bucket number from its sign bits
+    signs = np.einsum("vd,tbd->vtb", vecs, planes) >= 0
+    buckets = (signs * (1 << np.arange(bits))).sum(axis=2)
+    row = {int(i): n for n, i in enumerate(ids)}
+    a = np.array([row[int(i)] for i in exact.column("id_a").to_pylist()], int)
+    b = np.array([row[int(i)] for i in exact.column("id_b").to_pylist()], int)
+    keep = (buckets[a] == buckets[b]).any(axis=1) if len(a) else np.zeros(0, bool)
+    lsh = exact.filter(keep)
+    return {"cols": sorted(lsh.column_names),
+            "rows": tools.rowset(list(lsh.column_names), tools._arrow_rows(lsh))}
+
+
+class QueryChecker:
+    """Checks contract-query results (as Arrow tables) against the
+    answers ``oracle_answers`` computed."""
+
+    def __init__(self, root: str, oracle: dict[str, dict],
                  subset_of: dict[str, str] | None = None):
         """``subset_of`` maps a rows-only key to an oracle-backed key whose
         rows must contain all of its rows (an approximate search must
         return only pairs the exact search returns, with equal scores)."""
-        import duckdb
-
         self._tools = _oracle_tools(root)
-        self._con = duckdb.connect()
-        for t in ("region nation customer supplier part orders lineitem "
-                  "events documents embeddings").split():
-            self._con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{data_dir}/{t}.parquet')"
-            )
-        self._sql = oracle_sql
+        self._oracle = oracle
         self._subset_of = subset_of or {}
-        self._expected: dict[str, tuple[list, list[str]]] = {}
         self._digest: dict[str, str] = {}
 
     def rowset(self, tbl) -> list[str]:
         t = self._tools
         return t.rowset(list(tbl.column_names), t._arrow_rows(tbl))
 
-    def _oracle(self, key: str):
-        if key not in self._expected:
-            d = self._con.execute(self._sql[key]).arrow()
-            self._expected[key] = (sorted(d.column_names), self.rowset(d))
-        return self._expected[key]
-
     def check(self, key: str, tbl) -> list[str]:
         """Problems with one result; empty means correct."""
         rows = self.rowset(tbl)
-        if key in self._sql:
-            cols, want = self._oracle(key)
+        if key in self._oracle:
+            cols, want = self._oracle[key]["cols"], self._oracle[key]["rows"]
             if sorted(tbl.column_names) != cols:
                 return [f"{key}: columns {sorted(tbl.column_names)} != {cols}"]
             if rows != want:
@@ -80,7 +124,7 @@ class QueryChecker:
             return [f"{key}: empty result"]
         if key in self._subset_of:
             exact = self._subset_of[key]
-            if set(rows) - set(self._oracle(exact)[1]):
+            if set(rows) - set(self._oracle[exact]["rows"]):
                 return [f"{key}: rows outside the exact result of {exact}"]
         digest = hashlib.sha1("\n".join(rows).encode()).hexdigest()
         first = self._digest.setdefault(key, digest)

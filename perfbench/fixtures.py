@@ -5,8 +5,8 @@ the same seed writes the same bytes.  The engine never sees anything but
 these files.
 
 - ``write_tables``: the star-schema + events + corpus tables the
-  contract queries read (same schemas and value domains as the driver
-  fixtures described in FIXTURES.md).
+  contract queries read, calibrated against the driver fixtures
+  (FIXTURES.md).
 - ``write_season``: classic NetCDF daily model grids plus a topo dim with
   overlapping basin masks, NaN-masked cells and an EP2 follow-up batch.
 - ``write_corpus``: a curation corpus with planted exact and near
@@ -55,7 +55,15 @@ def _day_ts(rng, n, start: datetime.date, days: int) -> pa.Array:
 def write_tables(
     out_dir: str, seed: int, lineitem_rows: int, n_docs: int, n_vecs: int
 ) -> None:
-    """Write the ten contract tables as one parquet file each."""
+    """Write the ten contract tables as one parquet file each.
+
+    Calibrated against the driver's own sf0.001-sf0.1 fixtures
+    (FIXTURES.md): the same schemas, row-count ratios and value domains,
+    uniform foreign keys (so lines per order are Poisson(4) and ~2% of
+    orders have none), day-precision order/ship dates and microsecond
+    event times, unit-norm random embeddings, and a word-soup corpus
+    without PII in which ~5% of documents are one-word-inserted or
+    -deleted copies of another and ~0.2% are exact copies."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
     n_orders = max(lineitem_rows // 4, 10)
@@ -90,19 +98,22 @@ def write_tables(
         "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
         "s_acctbal": np.round(rng.uniform(-999.99, 9999.99, n_supp), 2),
     }), p("supplier"))
-    adj = np.array(["hot", "blue", "large", "small", "red", "dark"])
-    noun = np.array(["bolt", "ring", "nut", "gear", "pipe"])
-    types = np.array(["ECONOMY", "LARGE", "SMALL", "STANDARD", "PROMO"])
+    adj = np.array(["red", "new", "hot", "small", "cold", "large", "old",
+                    "blue"])
+    noun = np.array(["bolt", "anvil", "ring", "rod", "plate", "gear",
+                     "widget", "nut"])
+    types = np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
+                      "STANDARD"])
     pq.write_table(pa.table({
         "p_partkey": pa.array(np.arange(n_part), pa.int64()),
         "p_name": np.char.add(
-            np.char.add(adj[rng.integers(0, 6, n_part)], " "),
-            noun[rng.integers(0, 5, n_part)],
+            np.char.add(adj[rng.integers(0, 8, n_part)], " "),
+            noun[rng.integers(0, 8, n_part)],
         ),
         "p_brand": np.char.add("Brand#", rng.integers(1, 26, n_part).astype(str)),
-        "p_type": types[rng.integers(0, 5, n_part)],
+        "p_type": types[rng.integers(0, 6, n_part)],
         "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": np.round(900 + np.arange(n_part) * 0.1 % 1100, 2),
+        "p_retailprice": np.round(900 + np.arange(n_part) * 0.1 % 100, 2),
     }), p("part"))
     prios = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
                       "5-LOW"])
@@ -114,19 +125,19 @@ def write_tables(
         "o_orderdate": _day_ts(rng, n_orders, datetime.date(1995, 1, 1), 2404),
         "o_orderpriority": prios[rng.integers(0, 5, n_orders)],
     }), p("orders"))
-    qty = rng.integers(1, 51, lineitem_rows).astype(np.float64)
+    n = lineitem_rows
     pq.write_table(pa.table({
-        "l_orderkey": pa.array(rng.integers(0, n_orders, lineitem_rows), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, n_part, lineitem_rows), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, lineitem_rows), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, lineitem_rows), pa.int32()),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * rng.uniform(900, 2100, lineitem_rows), 2),
-        "l_discount": np.round(rng.integers(0, 11, lineitem_rows) / 100, 2),
-        "l_tax": np.round(rng.integers(0, 9, lineitem_rows) / 100, 2),
-        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, lineitem_rows)],
-        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, lineitem_rows)],
-        "l_shipdate": _day_ts(rng, lineitem_rows, datetime.date(1995, 1, 2), 2498),
+        "l_orderkey": pa.array(rng.integers(0, n_orders, n), pa.int64()),
+        "l_partkey": pa.array(rng.integers(0, n_part, n), pa.int64()),
+        "l_suppkey": pa.array(rng.integers(0, n_supp, n), pa.int64()),
+        "l_linenumber": pa.array(rng.integers(1, 8, n), pa.int32()),
+        "l_quantity": rng.integers(1, 51, n).astype(np.float64),
+        "l_extendedprice": np.round(rng.uniform(900, 105000, n), 2),
+        "l_discount": np.round(rng.uniform(0, 0.1, n), 2),
+        "l_tax": np.round(rng.uniform(0, 0.08, n), 2),
+        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, n)],
+        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n)],
+        "l_shipdate": _day_ts(rng, n, datetime.date(1995, 1, 2), 2498),
     }), p("lineitem"))
     us = rng.integers(0, 30 * 86400 * 10**6, n_events)
     ev_types = np.array(["click", "error", "purchase", "signup", "view"])
@@ -141,29 +152,34 @@ def write_tables(
         "value": np.round(rng.exponential(50.0, n_events), 2),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)],
     }), p("events"))
-    texts = []
-    for _ in range(n_docs):
-        words = list(rng.choice(SOUP_WORDS, rng.integers(10, 101)))
-        if rng.random() < 0.1:
-            words.insert(int(rng.integers(0, len(words))), _pii(rng))
-        texts.append(" ".join(words))
-    # one document in ten is an earlier one with a word replaced, so the
-    # near-dup keys have clusters to find
-    for i in rng.choice(np.arange(1, n_docs), n_docs // 10, replace=False):
+    texts = [" ".join(rng.choice(SOUP_WORDS, rng.integers(10, 101)))
+             for _ in range(n_docs)]
+    # near-duplicate pairs: a later document is an earlier one with one
+    # word inserted or deleted; a few later documents are exact copies
+    n_near, n_exact = n_docs // 20, max(n_docs // 600, 1)
+    picks = rng.choice(np.arange(1, n_docs), n_near + n_exact, replace=False)
+    for j, i in enumerate(picks):
         words = texts[int(rng.integers(0, i))].split(" ")
-        words[int(rng.integers(0, len(words)))] = str(rng.choice(SOUP_WORDS))
+        if j < n_near:
+            pos = int(rng.integers(0, len(words)))
+            if rng.random() < 0.5 and len(words) > 10:
+                del words[pos]
+            else:
+                words.insert(pos, str(rng.choice(SOUP_WORDS)))
         texts[i] = " ".join(words)
     pq.write_table(pa.table({
         "doc_id": pa.array(np.arange(n_docs), pa.int64()),
         "text": texts,
         "lang": np.array(LANGS)[rng.choice(5, n_docs, p=LANG_WEIGHTS)],
-        "source": np.char.add("src", rng.integers(0, 20, n_docs).astype(str)),
+        "source": np.char.add("src", (np.arange(n_docs) % 20).astype(str)),
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     }), p("documents"))
-    emb = rng.normal(0.0, 0.125, (n_vecs, 64)).astype(np.float32)
+    emb = rng.normal(0.0, 1.0, (n_vecs, 64))
+    emb /= np.linalg.norm(emb, axis=1, keepdims=True)
     pq.write_table(pa.table({
         "vec_id": pa.array(np.arange(n_vecs), pa.int64()),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
+        "embedding": pa.array(list(emb.astype(np.float32)),
+                              pa.list_(pa.float32())),
         "label": pa.array(rng.integers(0, 10, n_vecs), pa.int32()),
     }), p("embeddings"))
 

@@ -13,7 +13,6 @@ import contextlib
 import functools
 import json
 import os
-import resource
 import statistics
 import time
 from collections import defaultdict
@@ -210,16 +209,31 @@ def read_event_log(path: str) -> dict[str, dict]:
 
 # -- process facts ---------------------------------------------------------
 
-def peak_rss_mb(spark) -> float:
-    """Peak resident memory of the driver's Python process plus the JVM."""
-    py = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-    jvm = 0.0
+def _vm_hwm_mb(pid) -> float:
+    with open(f"/proc/{pid}/status") as f:
+        for line in f:
+            if line.startswith("VmHWM:"):
+                return int(line.split()[1]) / 1024
+    return 0.0
+
+
+def reset_peak_rss() -> None:
+    """Restart this process's resident-memory high-water mark from its
+    current size, so the driver's peak covers only what follows."""
     try:
-        pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-        with open(f"/proc/{pid}/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    jvm = int(line.split()[1]) / 1024
+        with open("/proc/self/clear_refs", "w") as f:
+            f.write("5")
+    except OSError:
+        pass
+
+
+def peak_rss_mb(spark) -> float:
+    """Peak resident memory of the driver's Python process (since
+    ``reset_peak_rss``) plus the JVM."""
+    py = jvm = 0.0
+    try:
+        py = _vm_hwm_mb("self")
+        jvm = _vm_hwm_mb(int(spark._jvm.java.lang.ProcessHandle.current().pid()))
     except OSError:
         pass
     return py + jvm

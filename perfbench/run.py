@@ -2,10 +2,10 @@
 
     python3 perfbench/run.py --workload query_core --seed 1 --seconds 10 --trace 0
 
-Runs one workload from the checkout root: writes seeded inputs, sets up a
-session (several times; the median is ``setup_s``), makes untimed warm
-passes, then runs closed-loop passes for ``--seconds`` (and at least the
-workload's ``min_passes``).  Every
+Runs one workload from the checkout root: writes seeded inputs (in a
+child process), sets up a session (several times; the median is
+``setup_s``), makes untimed warm passes, then runs closed-loop passes for
+``--seconds`` (and at least the workload's ``min_passes``).  Every
 operation's output is checked.  The last line of standard output is one
 JSON object: ``{"correct", "attempted", "failed", "metrics"}``, holding
 the end-to-end metrics with ``--trace 0`` and the per-layer metrics with
@@ -24,15 +24,17 @@ import argparse
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUP_REPS = 3
-# untimed warm-up: whole passes until this many seconds have gone (at
-# least one), so JIT compilation and first-use costs settle first
-WARM_SECONDS = 4.0
+# A fixed-size driver heap (the engine's default is an 8 GB ceiling the
+# JVM grows into): peak RSS then does not depend on when the collector
+# decides to grow the heap, which varied it by ~30% between runs.
+HEAP = "2g"
 
 
 def parse_args(argv):
@@ -43,6 +45,10 @@ def parse_args(argv):
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--size", choices=("full", "tiny"), default="full",
                     help="input sizes; 'tiny' is for the smoke test")
+    ap.add_argument("--tables", default=None,
+                    help="query_* only: read the ten contract tables from "
+                         "this directory instead of generating them (to "
+                         "compare the generated tables with another data set)")
     return ap.parse_args(argv)
 
 
@@ -60,7 +66,6 @@ def prepare_environment(work: str) -> dict[str, str]:
     for d in (tmp, local):
         os.makedirs(d, exist_ok=True)
     jopts = f"-Djava.io.tmpdir={tmp} -Dderby.system.home={work} -XX:-UsePerfData"
-    heap = "2g"
     os.environ.update(
         TMPDIR=tmp,
         SPARK_LOCAL_DIRS=local,
@@ -70,7 +75,7 @@ def prepare_environment(work: str) -> dict[str, str]:
         ),
         PYSPARK_PYTHON=sys.executable,
         SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
-        SPARK_GRAFT_DRIVER_MEM=heap,
+        SPARK_GRAFT_DRIVER_MEM=HEAP,
     )
     os.environ.pop("SPARK_MASTER", None)
     tempfile.tempdir = tmp
@@ -78,9 +83,7 @@ def prepare_environment(work: str) -> dict[str, str]:
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # a fixed-size heap keeps peak RSS from depending on when the
-        # collector decides to grow it
-        "spark.driver.extraJavaOptions": f"{jopts} -Xms{heap}",
+        "spark.driver.extraJavaOptions": f"{jopts} -Xms{HEAP}",
     }
 
 
@@ -178,7 +181,20 @@ def stop_jvm(spark) -> None:
             proc.wait()
 
 
+def make_inputs(args, work: str) -> dict:
+    """Run ``inputs.py`` for this run and return what it wrote."""
+    cmd = [sys.executable, os.path.join(ROOT, "perfbench", "inputs.py"),
+           "--workload", args.workload, "--seed", str(args.seed),
+           "--size", args.size, "--work", work]
+    if args.tables:
+        cmd += ["--tables", os.path.abspath(args.tables)]
+    subprocess.run(cmd, check=True, stdout=sys.stderr)
+    with open(os.path.join(work, "inputs.json")) as f:
+        return json.load(f)
+
+
 def main(argv=None) -> int:
+    started = time.perf_counter()
     args = parse_args(argv)
     if not os.path.isfile(os.path.join(ROOT, "snowav_spark", "__init__.py")):
         print("perfbench: no snowav_spark package in this checkout",
@@ -191,7 +207,13 @@ def main(argv=None) -> int:
     if args.workload not in workloads.WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}", file=sys.stderr)
         return 2
+    if args.tables and not args.workload.startswith("query_"):
+        print("perfbench: --tables applies to the query_* workloads only",
+              file=sys.stderr)
+        return 2
     tag = f"{args.workload}-seed{args.seed}-trace{args.trace}"
+    if args.tables:
+        tag += "-tables"
     work = os.path.join(ROOT, ".perfbench", "work", tag)
     results = os.path.join(ROOT, ".perfbench", "results")
     shutil.rmtree(work, ignore_errors=True)
@@ -211,11 +233,12 @@ def main(argv=None) -> int:
     ctx = Context(work, args.seed, args.size, tracer)
     wl = workloads.make(args.workload)
     t0 = time.perf_counter()
-    wl.prepare(ctx)
+    wl.prepare(ctx, make_inputs(args, work))
     inputs_s = time.perf_counter() - t0
 
     setup_s = []
     spark = None
+    harness.reset_peak_rss()
     try:
         for _ in range(SETUP_REPS):
             t0 = time.perf_counter()
@@ -225,7 +248,7 @@ def main(argv=None) -> int:
             wl.load(ctx)
             setup_s.append(time.perf_counter() - t0)
         wl.after_setup(ctx)
-        measure(ctx, wl, WARM_SECONDS, "warm")
+        warm = measure(ctx, wl, wl.warm_seconds, "warm")
         traced, diag = [], {}
         if trace:
             # half the window untraced, half traced: their ratio is the
@@ -251,8 +274,9 @@ def main(argv=None) -> int:
 
     record = {
         "workload": args.workload, "seconds": args.seconds, "size": args.size,
+        "tables": args.tables or "generated",
         "env": env, "inputs_s": inputs_s, "setup_reps_s": setup_s,
-        "passes_s": plain, "traced_passes_s": traced,
+        "warm_passes_s": warm, "passes_s": plain, "traced_passes_s": traced,
         "index_build_s": getattr(wl, "index_build", {}),
         "diagnostic": diag, "problems": ctx.problems[:50],
         "calls": [(r.name, r.pass_no, r.seconds) for r in ctx.records
@@ -267,6 +291,7 @@ def main(argv=None) -> int:
         values, extra = metrics.end_to_end(ctx, wl, setup_s, plain, rss)
         record.update(extra)
     record["metrics"] = values
+    record["wall_s"] = time.perf_counter() - started
     with open(os.path.join(results, f"{tag}.json"), "w") as f:
         json.dump(record, f, indent=1, default=str)
     shutil.rmtree(work, ignore_errors=True)

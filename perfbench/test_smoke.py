@@ -59,25 +59,62 @@ def test_workload_names_match_the_harness():
 
 
 def test_query_check_catches_a_corrupted_result(tmp_path):
-    import duckdb
-
     data = str(tmp_path / "tables")
     fixtures.write_tables(data, seed=3, lineitem_rows=3000, n_docs=50, n_vecs=50)
     sql = {"q_topk": "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
                      "ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"}
-    checker = checks.QueryChecker(ROOT, data, sql)
-    con = duckdb.connect()
-    good = con.execute(sql["q_topk"].replace(
-        "FROM orders", f"FROM read_parquet('{data}/orders.parquet')")).arrow()
+    oracle = checks.oracle_answers(ROOT, data, sql)
+    checker = checks.QueryChecker(ROOT, oracle, {"q_subset": "q_topk"})
+    good = _orders_top10(data)
     assert checker.check("q_topk", good) == []
     price = good.column("o_totalprice").to_pylist()
     price[3] += 0.01
     bad = good.set_column(2, "o_totalprice", pa.array(price))
     assert checker.check("q_topk", bad)
+    assert checker.check("q_topk", good.slice(0, 9))
     # rows-only keys: the digest must not change between passes
     assert checker.check("q_rows_only", good) == []
     assert checker.check("q_rows_only", bad)
     assert checker.check("q_empty", good.slice(0, 0))
+    # approximate keys: only rows of their exact twin
+    assert checker.check("q_subset", good.slice(0, 4)) == []
+    assert checker.check("q_subset", bad.slice(3, 1))
+
+
+def _orders_top10(data):
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{data}/orders.parquet",
+                      columns=["o_orderkey", "o_custkey", "o_totalprice"])
+    return t.sort_by([("o_totalprice", "descending"),
+                      ("o_orderkey", "ascending")]).slice(0, 10)
+
+
+def test_generated_tables_have_the_driver_row_counts_and_types(tmp_path):
+    import pyarrow.parquet as pq
+
+    data = str(tmp_path / "tables")
+    fixtures.write_tables(data, seed=3, **workloads.SF_0_001)
+    rows = {t: pq.read_metadata(f"{data}/{t}.parquet").num_rows
+            for t in ("orders", "lineitem", "events", "documents", "embeddings")}
+    # the driver's sf0.001 row counts (FIXTURES.md)
+    assert rows == {"orders": 1500, "lineitem": 6000, "events": 1000,
+                    "documents": 500, "embeddings": 500}
+    ts = pq.read_schema(f"{data}/lineitem.parquet").field("l_shipdate").type
+    assert ts == pa.timestamp("us")
+
+
+def test_lsh_answer_equals_the_duckdb_twin(tmp_path):
+    from snowav_spark import contract
+
+    data = str(tmp_path / "tables")
+    fixtures.write_tables(data, seed=4, lineitem_rows=600, n_docs=50,
+                          n_vecs=200)
+    twin = checks.oracle_answers(
+        ROOT, data, {"lsh": contract.ORACLE[workloads.LSH_KEY]})["lsh"]
+    ours = checks.lsh_answer(ROOT, data, contract.ORACLE["q_dedup_embed"],
+                             *workloads.LSH_PARAMS)
+    assert twin["rows"] and ours == twin
 
 
 def test_season_checks_catch_a_corrupted_store():

@@ -3,7 +3,12 @@ functions, in a closed loop with one client: the next call starts when
 the previous one has returned.
 
 A workload is a class with
-- ``prepare(ctx)``: write the seeded inputs (not part of any timing);
+- ``make_inputs(root, work, seed, size, tables)``: write the seeded
+  inputs and return, as JSON-able data, the answers the checks compare
+  against.  It runs in a child process (``inputs.py``), so neither the
+  generators nor the DuckDB oracle add to the run's memory;
+- ``prepare(ctx, inputs)``: take those answers in (not part of any
+  timing);
 - ``load(ctx)``: the first loads of those inputs on a fresh session
   (timed as part of set-up);
 - ``after_setup(ctx)``: one-off work users pay before serving (index
@@ -11,6 +16,8 @@ A workload is a class with
 - ``run_pass(ctx)``: one full pass; every engine call goes through
   ``ctx.call`` so it is timed, traced and checked;
 - ``items``: what ``items_per_s`` counts;
+- ``warm_seconds``: untimed warm-up, in whole passes (at least one), so
+  JIT compilation and first-use costs settle before measuring;
 - ``min_passes``: passes an untraced run measures even when the window is
   shorter.  It keeps the number of operations, and with it the tail
   percentile the run can report, the same on a slower machine.
@@ -37,9 +44,13 @@ BASELINE_MD_S = {
 }
 CORE_KEYS = list(BASELINE_MD_S)
 # q_triangles is left out: fresh runs of it vary 8x (ROADMAP item 2)
-# Approximate keys whose rows must be a subset of an exact key's rows.
-# q_dedup_embed_lsh has its own DuckDB twin, but it runs for ~10 s here.
-SUBSET_OF = {"q_dedup_embed_lsh": "q_dedup_embed", "q_semdedup": "q_dedup_embed"}
+# A rows-only approximate key whose rows must be a subset of an exact
+# oracle-backed key's rows.
+SUBSET_OF = {"q_semdedup": "q_dedup_embed"}
+# q_dedup_embed_lsh's expected rows come from checks.lsh_answer at the
+# contract's parameters (tables, bits, dim, hyperplane seed); its DuckDB
+# twin takes ~10 s at sf0.001
+LSH_KEY, LSH_PARAMS = "q_dedup_embed_lsh", (10, 3, 64, 42)
 LLM_KEYS = [
     "q_semdedup", "q_dedup_embed_lsh", "q_dedup_embed", "q_minhash_lsh",
     "q_dedup_resolve", "q_hybrid_rrf", "q_clean_text", "q_pii_redact",
@@ -48,16 +59,13 @@ LLM_KEYS = [
 ]
 
 # Input sizes per workload: "full" is what the benchmark measures, "tiny"
-# is the smoke test's.
+# is the smoke test's.  The table sizes are the driver's scale factors:
+# sf0.1 for query_core, sf0.001 for query_llm and the smoke test.
+SF_0_1 = dict(lineitem_rows=600_000, n_docs=5000, n_vecs=2000)
+SF_0_001 = dict(lineitem_rows=6000, n_docs=500, n_vecs=500)
 SIZES = {
-    "query_core": {
-        "full": dict(lineitem_rows=600_000, n_docs=5000, n_vecs=2000),
-        "tiny": dict(lineitem_rows=60_000, n_docs=500, n_vecs=500),
-    },
-    "query_llm": {
-        "full": dict(lineitem_rows=6000, n_docs=300, n_vecs=300),
-        "tiny": dict(lineitem_rows=6000, n_docs=200, n_vecs=200),
-    },
+    "query_core": {"full": SF_0_1, "tiny": SF_0_001},
+    "query_llm": {"full": SF_0_001, "tiny": SF_0_001},
     "ep1_season": {
         "full": dict(ny=150, nx=150, n_days=5, n_new=2),
         "tiny": dict(ny=30, nx=30, n_days=4, n_new=2),
@@ -77,29 +85,41 @@ class QueryMix:
 
     items = "queries"
 
-    def __init__(self, name: str, keys: list[str], index: bool, min_passes: int):
+    def __init__(self, name: str, keys: list[str], index: bool,
+                 min_passes: int, warm_seconds: float):
         self.name = name
         self.keys = keys
         self.min_passes = min_passes
+        self.warm_seconds = warm_seconds
         self.index = index
         self.index_build: dict[str, float] = {}
         self.items_per_pass = len(keys)
         self._loaded: dict[int, object] = {}
 
-    def prepare(self, ctx) -> None:
-        self.data = os.path.join(ctx.work, "tables")
-        fixtures.write_tables(self.data, ctx.seed, **SIZES[self.name][ctx.size])
+    def make_inputs(self, root, work, seed, size, tables=None) -> dict:
+        """Seeded tables (or the given table directory) and every
+        oracle-backed key's expected rowset."""
         from snowav_spark import contract
 
+        data = tables or os.path.join(work, "tables")
+        if not tables:
+            fixtures.write_tables(data, seed, **SIZES[self.name][size])
+        sql = {k: v for k, v in contract.ORACLE.items()
+               if k in self.keys and k != LSH_KEY}
+        oracle = checks.oracle_answers(root, data, sql)
+        if LSH_KEY in self.keys:
+            oracle[LSH_KEY] = checks.lsh_answer(
+                root, data, contract.ORACLE["q_dedup_embed"], *LSH_PARAMS)
+        return {"data": data, "oracle": oracle}
+
+    def prepare(self, ctx, inputs) -> None:
+        from snowav_spark import contract
+
+        self.data = inputs["data"]
         self.builders = {
             k: getattr(contract, contract.QUERIES[k].__name__) for k in self.keys
         }
-        self.checker = checks.QueryChecker(
-            ctx.root, self.data,
-            {k: v for k, v in contract.ORACLE.items()
-             if k in self.keys and k not in SUBSET_OF},
-            SUBSET_OF,
-        )
+        self.checker = checks.QueryChecker(ctx.root, inputs["oracle"], SUBSET_OF)
         self.order = random.Random(ctx.seed)
 
     def load(self, ctx) -> None:
@@ -199,14 +219,32 @@ class Season:
     items = "EP1 grid cells"
     items_call = "ep1.run"
     min_passes = 2
+    warm_seconds = 0.0
 
-    def prepare(self, ctx) -> None:
+    def make_inputs(self, root, work, seed, size, tables=None) -> dict:
+        """The season's NetCDF grids and topo, and the numpy gold
+        summary of every (day, basin, variable, band)."""
+        data = os.path.join(work, "season")
+        season = fixtures.write_season(data, seed, **SIZES[self.name][size])
+        gold = checks.season_gold(season, fixtures.SEASON_EDGES)
+        return {
+            "data": data,
+            "ep1_dir": season["ep1_dir"],
+            "ep2_dir": season["ep2_dir"],
+            "days": [d.isoformat() for d in season["days"]],
+            "n_days": season["n_days"],
+            "gold": [[d.isoformat(), b, v, band, val]
+                     for (d, b, v, band), val in gold.items()],
+        }
+
+    def prepare(self, ctx, inputs) -> None:
         sz = SIZES[self.name][ctx.size]
-        self.data = os.path.join(ctx.work, "season")
-        self.season = fixtures.write_season(self.data, ctx.seed, **sz)
-        self.gold = checks.season_gold(self.season, fixtures.SEASON_EDGES)
-        days = self.season["days"]
-        self.ep1_days = days[: self.season["n_days"]]
+        day = datetime.date.fromisoformat
+        self.data = inputs["data"]
+        self.season = dict(inputs, days=[day(d) for d in inputs["days"]])
+        self.gold = {(day(d), b, v, band): val
+                     for d, b, v, band, val in inputs["gold"]}
+        self.ep1_days = self.season["days"][: inputs["n_days"]]
         self.items_per_pass = (
             sz["ny"] * sz["nx"] * sz["n_days"] * len(fixtures.SEASON_VARS))
         self.n = 0
@@ -343,12 +381,18 @@ class Curation:
     items = "documents"
     capacity = 512
     min_passes = 2
+    warm_seconds = 0.0
 
-    def prepare(self, ctx) -> None:
-        sz = SIZES[self.name][ctx.size]
-        self.data = os.path.join(ctx.work, "corpus")
-        self.planted = fixtures.write_corpus(self.data, ctx.seed, **sz)
-        self.items_per_pass = sz["n_docs"]
+    def make_inputs(self, root, work, seed, size, tables=None) -> dict:
+        """The corpus and its planted duplicate clusters."""
+        data = os.path.join(work, "corpus")
+        planted = fixtures.write_corpus(data, seed, **SIZES[self.name][size])
+        return {"data": data, "planted": planted}
+
+    def prepare(self, ctx, inputs) -> None:
+        self.data = inputs["data"]
+        self.planted = inputs["planted"]
+        self.items_per_pass = SIZES[self.name][ctx.size]["n_docs"]
         self.rows: dict[str, int] = {}
         self.n = 0
 
@@ -413,9 +457,14 @@ class Curation:
 
 def make(name: str):
     if name == "query_core":
-        return QueryMix(name, CORE_KEYS, index=False, min_passes=4)
+        # ~2 s passes whose times vary ±10% pass to pass: a median of
+        # six, after the first ~3 passes' JIT warm-up
+        return QueryMix(name, CORE_KEYS, index=False, min_passes=6,
+                        warm_seconds=6.0)
     if name == "query_llm":
-        return QueryMix(name, LLM_KEYS, index=True, min_passes=2)
+        # build_indexes warms the JVM; one warm pass is enough
+        return QueryMix(name, LLM_KEYS, index=True, min_passes=2,
+                        warm_seconds=0.0)
     if name == "ep1_season":
         return Season()
     if name == "curate_corpus":
