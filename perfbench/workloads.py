@@ -458,9 +458,9 @@ class Curation:
 def make(name: str):
     if name == "query_core":
         # ~2 s passes whose times vary ±10% pass to pass: a median of
-        # six, after the first ~3 passes' JIT warm-up
-        return QueryMix(name, CORE_KEYS, index=False, min_passes=6,
-                        warm_seconds=6.0)
+        # five, after two passes of JIT warm-up
+        return QueryMix(name, CORE_KEYS, index=False, min_passes=5,
+                        warm_seconds=4.0)
     if name == "query_llm":
         # build_indexes warms the JVM; one warm pass is enough
         return QueryMix(name, LLM_KEYS, index=True, min_passes=2,
