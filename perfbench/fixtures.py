@@ -5,7 +5,7 @@ the same seed writes the same bytes.  The engine never sees anything but
 these files.
 
 - ``write_tables``: the star-schema + events + corpus tables the
-  contract queries read, calibrated against the driver fixtures
+  contract queries read, calibrated against the contract fixtures
   (FIXTURES.md).
 - ``write_season``: classic NetCDF daily model grids plus a topo dim with
   overlapping basin masks, NaN-masked cells and an EP2 follow-up batch.
@@ -57,7 +57,7 @@ def write_tables(
 ) -> None:
     """Write the ten contract tables as one parquet file each.
 
-    Calibrated against the driver's own sf0.001-sf0.1 fixtures
+    Calibrated against the sf0.001-sf0.1 contract fixtures
     (FIXTURES.md): the same schemas, row-count ratios and value domains,
     uniform foreign keys (so lines per order are Poisson(4) and ~2% of
     orders have none), day-precision order/ship dates and microsecond

@@ -219,7 +219,7 @@ def _vm_hwm_mb(pid) -> float:
 
 def reset_peak_rss() -> None:
     """Restart this process's resident-memory high-water mark from its
-    current size, so the driver's peak covers only what follows."""
+    current size, so its peak covers only what follows."""
     try:
         with open("/proc/self/clear_refs", "w") as f:
             f.write("5")
@@ -228,7 +228,7 @@ def reset_peak_rss() -> None:
 
 
 def peak_rss_mb(spark) -> float:
-    """Peak resident memory of the driver's Python process (since
+    """Peak resident memory of this Python process (since
     ``reset_peak_rss``) plus the JVM."""
     py = jvm = 0.0
     try:

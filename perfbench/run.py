@@ -31,7 +31,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUP_REPS = 3
-# A fixed-size driver heap (the engine's default is an 8 GB ceiling the
+# A fixed-size Spark driver heap (the engine's default is an 8 GB ceiling the
 # JVM grows into): peak RSS then does not depend on when the collector
 # decides to grow the heap, which varied it by ~30% between runs.
 HEAP = "2g"

@@ -90,14 +90,14 @@ def _orders_top10(data):
                       ("o_orderkey", "ascending")]).slice(0, 10)
 
 
-def test_generated_tables_have_the_driver_row_counts_and_types(tmp_path):
+def test_generated_tables_have_the_sf0_001_row_counts_and_types(tmp_path):
     import pyarrow.parquet as pq
 
     data = str(tmp_path / "tables")
     fixtures.write_tables(data, seed=3, **workloads.SF_0_001)
     rows = {t: pq.read_metadata(f"{data}/{t}.parquet").num_rows
             for t in ("orders", "lineitem", "events", "documents", "embeddings")}
-    # the driver's sf0.001 row counts (FIXTURES.md)
+    # the sf0.001 row counts in FIXTURES.md
     assert rows == {"orders": 1500, "lineitem": 6000, "events": 1000,
                     "documents": 500, "embeddings": 500}
     ts = pq.read_schema(f"{data}/lineitem.parquet").field("l_shipdate").type

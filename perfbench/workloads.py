@@ -59,7 +59,7 @@ LLM_KEYS = [
 ]
 
 # Input sizes per workload: "full" is what the benchmark measures, "tiny"
-# is the smoke test's.  The table sizes are the driver's scale factors:
+# is the smoke test's.  The table sizes are FIXTURES.md's scale factors:
 # sf0.1 for query_core, sf0.001 for query_llm and the smoke test.
 SF_0_1 = dict(lineitem_rows=600_000, n_docs=5000, n_vecs=2000)
 SF_0_001 = dict(lineitem_rows=6000, n_docs=500, n_vecs=500)
