@@ -1,6 +1,7 @@
 """Benchmark harness: runs the contract queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line — {"metric", "value", "unit", "queries", "sf"}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (unset or
+blank: the host's cores) and prints ONE JSON line — {"metric", "value",
+"unit", "queries", "sf"}.
 
 The driver records only a bounded TAIL of stdout, so the final line must
 stay short (BENCH_r02/r03 lost the head of a 92-entry line → "parsed":
@@ -56,50 +57,33 @@ BASELINE_MD_SECONDS = {
 }
 
 
-def _blessed_baseline(
-    repo_dir: str, run_sf: float, run_cpus: int | None = None
+def regression_bars(
+    repo_dir: str, sf: float, cpus: int, keys
 ) -> dict[str, float]:
-    """Per-key regression bars blessed from >=3 BENCH_HISTORY.jsonl runs
-    (tools/bless_baseline.py writes BASELINE_KEYS.json; VERDICT r9
-    item 3).  Missing file -> empty map (BASELINE.md rows still apply).
-    A blessed baseline recorded at a DIFFERENT scale factor than this
-    run's is skipped entirely (ADVICE r10): sf0.1 medians as bars for an
-    sf0.01 run would flag nothing, and as bars for an sf1 run would flag
-    everything — either way the drift gate would be measuring the SF
-    gap, not plan regressions.  The same applies to CORE COUNT: the
-    driver also benches at a lower $SPARK_GRAFT_CPUS to measure scaling,
-    and 32-core medians as bars for a 4-core run would flag every
-    parallel-heavy key and re-time them all — measuring the core-count
-    gap, not regressions — so a blessed 'cpus' that differs from the
-    run's skips the gate too.  Legacy files without the field keep the
-    old apply-always behavior."""
+    """Per-key regression bar for ``keys``: 2x a reference time, floored
+    at 0.05 s.  The reference is the key's BASELINE.md row at sf0.1,
+    else its median blessed from >=3 BENCH_HISTORY.jsonl runs at this
+    core count (tools/bless_baseline.py writes BASELINE_KEYS.json
+    ``by_cpus[str(cpus)]``; VERDICT r9 item 3).  Keys with neither have
+    no bar.  Blessed medians apply only at the sf and core count they
+    were measured at (ADVICE r10): sf0.1 medians as bars for an sf0.01
+    run would flag nothing, and 32-core medians as bars for a 4-core run
+    would flag every parallel-heavy key — either way the drift gate
+    would measure the configuration gap, not plan regressions."""
+    blessed: dict = {}
     path = os.path.join(repo_dir, "BASELINE_KEYS.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        blessed = json.load(f)
-    if blessed.get("sf") is not None and float(blessed["sf"]) != run_sf:
-        return {}
-    # Per-core-count bars (r12, VERDICT r11 item 7): the driver benches
-    # at a second, lower core count to measure scaling; with a single
-    # blessed cpus that run simply skipped the drift gate.  A blessed
-    # file may now carry "by_cpus": {"32": {keys...}, "8": {keys...}} —
-    # medians blessed separately at each core count — so BOTH driver
-    # runs get honest bars.  Additive: bars only, no timed action or
-    # output line changes; files without the section keep the exact
-    # r11 skip-on-mismatch behavior (pinned in test_round11_fixes).
-    by_cpus = blessed.get("by_cpus")
-    if run_cpus is not None and isinstance(by_cpus, dict):
-        entry = by_cpus.get(str(int(run_cpus)))
-        if entry is not None:
-            return {k: float(v) for k, v in entry["keys"].items()}
-    if (
-        run_cpus is not None
-        and blessed.get("cpus") is not None
-        and int(blessed["cpus"]) != run_cpus
-    ):
-        return {}
-    return {k: float(v) for k, v in blessed["keys"].items()}
+    if os.path.exists(path):
+        with open(path) as f:
+            baseline = json.load(f)
+        if baseline.get("sf") == sf:
+            section = baseline.get("by_cpus", {}).get(str(cpus), {})
+            blessed = section.get("keys", {})
+    md_bars = BASELINE_MD_SECONDS if sf == BASELINE_MD_SF else {}
+    return {
+        k: max(2.0 * md_bars.get(k, blessed.get(k, 0.0)), 0.05)
+        for k in keys
+        if k in md_bars or k in blessed
+    }
 
 
 def main() -> None:
@@ -147,32 +131,18 @@ def main() -> None:
     # earlier keys inflates late or heavy entries — q_pack_sequences
     # measured 0.49 s in-suite vs 0.39 s isolated in r7):
     #   (a) the 5 slowest keys, AND
-    #   (b) every key whose in-suite time breaches its regression bar.
-    # The bar per key is 2x its BASELINE.md row if it has one, else 2x
-    # its blessed BASELINE_KEYS.json median, with an absolute 0.05 s
-    # floor so a 5 ms key jittering to 11 ms is not flagged.  The
-    # isolated number REPLACES the key's contribution to the headline
+    #   (b) every key whose in-suite time breaches its regression bar
+    #       (regression_bars; the 0.05 s floor keeps a 5 ms key
+    #       jittering to 11 ms from being flagged).
+    # The isolated number REPLACES the key's contribution to the headline
     # total — not min(in-suite, isolated), which could only ever lower
     # the total and would bias the headline downward (ADVICE r9) — so
     # the suite metric reflects steady-state per-query cost in both
     # directions.  Keys STILL above the bar after isolation land in
     # "drift": real regressions, not suite-position jitter.
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    # tolerate SPARK_GRAFT_CPUS="" the way session.py does (ADVICE r11):
-    # int("") would crash the bench before any timing ran
-    _cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = (
-        int(_cpus_env)
-        if _cpus_env and _cpus_env.strip()
-        else spark.sparkContext.defaultParallelism
-    )
-    blessed = _blessed_baseline(repo_dir, sf, cpus)
-    md_bars = BASELINE_MD_SECONDS if sf == BASELINE_MD_SF else {}
-    bars = {
-        k: max(2.0 * md_bars.get(k, blessed.get(k, 0.0)), 0.05)
-        for k in timings
-        if k in md_bars or k in blessed
-    }
+    cpus = spark.sparkContext.defaultParallelism
+    bars = regression_bars(repo_dir, sf, cpus, timings)
     top5 = [
         k
         for k, _ in sorted(

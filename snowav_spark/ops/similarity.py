@@ -553,22 +553,32 @@ def _bounded_cobucket_pairs(
     keys: DataFrame, id_col: str, max_bucket: int | None
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs co-located in a ``(tbl, bk)`` key —
-    the candidate self-join shared by LSH banding and SemDeDup-style
+    the candidate stage shared by LSH banding and SemDeDup-style
     clustering, with the hot-bucket skew guard.
+
+    ``max_bucket=None`` is the plain self-join on ``(tbl, bk)``: exact,
+    but quadratic in the largest bucket.  Tests use it as the reference.
 
     With ``max_bucket`` set (ON by default in every caller): a
     degenerate bucket — e.g. thousands of identical embeddings — would
     make the self-join quadratic in that bucket.  SALT, don't drop:
     members get a row_number slot within their bucket and sub-buckets
-    of ≤max_bucket self-join independently (cost n·max_bucket, linear
-    in n), while a REPRESENTATIVE CHAIN (each sub-bucket's first member
-    paired with the next sub-bucket's first, +n/max_bucket pairs) keeps
-    a true duplicate cluster CONNECTED across sub-buckets — dropping
-    the bucket instead would zero recall on exactly the densest
+    of ≤max_bucket emit their pairs independently (cost n·max_bucket,
+    linear in n), while a REPRESENTATIVE CHAIN (each sub-bucket's first
+    member paired with the previous sub-bucket's first, +n/max_bucket
+    pairs) keeps a true duplicate cluster CONNECTED across sub-buckets —
+    dropping the bucket instead would zero recall on exactly the densest
     duplicates, the rows a dedup pass exists for.  The per-bucket
     row_number sorts one bucket in one task: O(n log n) once beats
-    O(n²) candidates.  Small buckets (≤max_bucket) take the single
-    sub-bucket path unchanged.
+    O(n²) candidates.  Buckets of ≤max_bucket are one sub-bucket, so
+    their pairs equal the plain self-join's.
+
+    Pair generation is a single consumer of the salted subtree: each
+    ``(tbl, bk, _sub)`` group's ids are collected into one sorted array
+    and the pairs stream out of two nested generators (see the comments
+    in the body).  The round-12 A/B against a self-join over the same
+    salted rows is recorded in OPTIMIZATION_r12.md and SCALE.md; its
+    script was removed (``git show 7d3674f:tools/probe_cobucket_exchange.py``).
 
     No-silent-caps telemetry (ADVICE r10, made LAZY per ADVICE r11's
     medium finding): when salting ENGAGES it changes results — cross-
@@ -585,10 +595,9 @@ def _bounded_cobucket_pairs(
     runs non-blockingly at the start of every subsequent call here (so
     long pipelines surface engagements as they go) and can be invoked
     directly — tests and batch drivers call it with a bounded wait
-    after their action.  Only ``max`` is observed: the salted subtree
-    is referenced four times (within a/b, chain a/b), and max is the
-    aggregate that stays correct when the CollectMetrics node's rows
-    are counted once per reference."""
+    after their action.  Only ``max`` is observed: it is the aggregate
+    that stays correct however often the CollectMetrics node's rows
+    are counted."""
     if max_bucket is None:
         pairs = (
             keys.select(F.col(id_col).alias("id_a"), "tbl", "bk")
@@ -609,10 +618,7 @@ def _bounded_cobucket_pairs(
     # The previous sub-bucket's representative sits exactly max_bucket
     # rows back in slot order, so the chain partner is a LAG over the
     # SAME window spec the row_number already pays -- merged into the
-    # existing Window node, it replaces what used to be a second
-    # self-join of the rep rows and with it two more executions of this
-    # whole subtree (guide §7.2 duplicated subtrees, §2.4 remove
-    # shuffles).
+    # existing Window node, no join of the representative rows.
     salted = keys.select(
         F.col(id_col),
         "tbl",
@@ -623,138 +629,68 @@ def _bounded_cobucket_pairs(
         bucket_n.alias("_bn"),
     ).observe(obs, F.max("_bn").alias("max_bucket_n"))
     _HOT_BUCKET_OBS.append((obs, max_bucket))
-    import os as _os
-
-    kernel = _os.environ.get("SNOWAV_COBUCKET_KERNEL", "agg")
-    if kernel == "agg":
-        # Single-consumer pair generation (r12, guide §2.4 share one
-        # exchange / §7.2 duplicated subtrees): the self-join form below
-        # references the salted subtree three times (within-a, within-b,
-        # chain) — Spark reuses only the (tbl, bk) Exchange, so the
-        # Sort + two Windows re-execute per reference, plus a broadcast
-        # (bench scale) or two join exchanges (at scale) for the join
-        # itself.  Instead, collect each (tbl, bk, _sub) group's ids
-        # into one sorted array: the aggregation's grouping keys are a
-        # SUPERSET of the window's hashpartitioning(tbl, bk), so
-        # ClusteredDistribution is already satisfied and the aggregate
-        # pipelines in the SAME stage — zero new exchanges — and the
-        # group is ≤ max_bucket ids (≤ 32 KB at 4096) by construction
-        # of the salting, so the per-group state is bounded even on a
-        # degenerate bucket.  Pairs then stream out of two nested
-        # generators (never an O(n²) in-memory array):
-        #   g1: posexplode the group -> (i, id_a);
-        #   g2: explode the ids AFTER position i as id_b (within
-        #       pairs); the i=0 row's list additionally carries
-        #       _prevrep, so the chain pair rides the same explode —
-        #       least/greatest then orients every pair (within pairs
-        #       are already ascending; only the chain element arrives
-        #       reversed).  All plain built-ins: an earlier form built
-        #       (id_a, id_b) STRUCTS via transform/filter higher-order
-        #       lambdas, whose interpreted per-element evaluation cost
-        #       ~4× the whole join kernel at bench scale — slice +
-        #       explode + least/greatest codegen instead (guide §4.1
-        #       prefer built-ins; measured numbers in
-        #       OPTIMIZATION_r12.md).
-        # Pair VALUES are identical to the join form: the sorted-array
-        # (i < j) enumeration is exactly the id_a < id_b co-bucket set,
-        # and the chain pair (_prev of the rep row, rep) is the same
-        # (rep_{s-1}, rep_s) the lag produced (rep = min id of the
-        # group, since slot order IS id order).  The only divergence is
-        # id_a < id_b now also guards the chain (the join form could
-        # emit (x, x) only if one id filled an entire sub-bucket —
-        # impossible below max_bucket duplicate probes).  The self-join
-        # form stays reproducible via SNOWAV_COBUCKET_KERNEL=join
-        # (measurement seam; fresh-JVM A/B in tools/
-        # probe_cobucket_exchange.py).
-        subs = salted.groupBy("tbl", "bk", "_sub").agg(
-            F.sort_array(F.collect_list(id_col)).alias("_ids"),
-            F.min(F.when(F.col("_rep"), F.col("_prev"))).alias("_prevrep"),
-        )
-        if _os.environ.get("SNOWAV_COBUCKET_SPREAD", "on") == "on":
-            # Spread the generation stage (guide §2.5): pipelining the
-            # aggregate on the window's (tbl, bk) exchange leaves a hot
-            # bucket's sub-bucket arrays in ONE task — the O(n²) pair
-            # generation then runs ~n_subs× under-parallel exactly in
-            # the salted regime.  One exchange of the COMPACT arrays
-            # (each id crosses once — orders less than the pair stream)
-            # re-keys by (tbl, bk, _sub); the explicit partition count
-            # pins the spread against AQE byte-based coalescing (the
-            # arrays are KBs; the generated pairs are not) and scales
-            # with the session's cores, not a constant.
-            subs = subs.repartition(
-                salted.sparkSession.sparkContext.defaultParallelism,
-                "tbl", "bk", "_sub",
-            )
-        g1 = subs.select(
-            "_ids",
-            "_prevrep",
-            F.posexplode("_ids").alias("_i", "id_a"),
-        )
-        tail = F.slice(
-            F.col("_ids"),
-            F.col("_i") + F.lit(2),
-            F.greatest(
-                F.lit(0), F.size("_ids") - F.col("_i") - F.lit(1)
-            ),
-        )
-        id_bs = F.when(
-            (F.col("_i") == 0) & F.col("_prevrep").isNotNull(),
-            F.concat(tail, F.array(F.col("_prevrep"))),
-        ).otherwise(tail)
-        pairs = (
-            g1.select("id_a", F.explode(id_bs).alias("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-        return pairs.distinct()
-    # The within self-join consumes the subtree twice; Spark only
-    # dedups Exchange subtrees, so the Sort + two Windows re-execute
-    # for the second reference.  Round 11 traded that re-execution for
-    # an explicit repartition on the join's (tbl, bk, _sub) keys — a
-    # measured ~11% LOSS at bench scale, argued (not measured) to win
-    # at real scale.  Round 12 measured it (tools/
-    # probe_cobucket_exchange.py, fresh JVM per arm, 200x the bench
-    # fixture): 400k uniform vectors, warm runs 8.8–12.0 s with the
-    # exchange vs 8.8–14.6 s without (wash within ±40% run noise), and
-    # 400k + 20k-identical hot-salted, best 78.8 vs 79.1 s (wash).
-    # The re-executed subtree sits downstream of the Window's own
-    # reused (tbl, bk) exchange, so the second execution costs one
-    # extra Sort+Window over already-shuffled rows — the same order of
-    # work the extra shuffle write + two fetches cost.  No regime won,
-    # so the self-join default keeps NO extra exchange (the r11 arm
-    # stays reproducible via SNOWAV_COBUCKET_EXCHANGE=on; both arms are
-    # value-identical because repartition changes distribution, never
-    # content, and slots / pair emission / distinct are
-    # partitioning-independent).
-    if _os.environ.get("SNOWAV_COBUCKET_EXCHANGE", "off") == "on":
-        dist = salted.repartition("tbl", "bk", "_sub")
-    else:
-        dist = salted
-    within = (
-        dist.select(F.col(id_col).alias("id_a"), "tbl", "bk", "_sub")
-        .join(
-            dist.select(
-                F.col(id_col).alias("id_b"), "tbl", "bk", "_sub"
-            ),
-            ["tbl", "bk", "_sub"],
+    # Collect each (tbl, bk, _sub) group's ids into one sorted array
+    # (guide §2.4 share one exchange / §7.2 duplicated subtrees).  The
+    # aggregation's grouping keys are a SUPERSET of the window's
+    # hashpartitioning(tbl, bk), so it pipelines in the window's stage,
+    # and a group holds ≤ max_bucket ids (≤ 32 KB at 4096) by
+    # construction of the salting, so its state stays bounded even on a
+    # degenerate bucket.  The group's representative is its min id
+    # (slot order IS id order); _prevrep is that representative's lag,
+    # the previous sub-bucket's representative.
+    subs = salted.groupBy("tbl", "bk", "_sub").agg(
+        F.sort_array(F.collect_list(id_col)).alias("_ids"),
+        F.min(F.when(F.col("_rep"), F.col("_prev"))).alias("_prevrep"),
+    )
+    # Spread the generation stage (guide §2.5): pipelined on the
+    # window's (tbl, bk) exchange, a hot bucket's sub-bucket arrays
+    # would sit in ONE task and the O(n²) pair generation would run
+    # ~n_subs× under-parallel exactly in the salted regime.  One
+    # exchange of the COMPACT arrays (each id crosses once — orders
+    # less than the pair stream) re-keys by (tbl, bk, _sub); the
+    # explicit partition count pins the spread against AQE byte-based
+    # coalescing (the arrays are KBs; the generated pairs are not) and
+    # scales with the session's cores, not a constant.
+    subs = subs.repartition(
+        salted.sparkSession.sparkContext.defaultParallelism,
+        "tbl", "bk", "_sub",
+    )
+    # Pairs stream out of two nested generators (never an O(n²)
+    # in-memory array):
+    #   g1: posexplode the group -> (i, id_a);
+    #   g2: explode the ids AFTER position i as id_b (within pairs);
+    #       the i=0 row's list additionally carries _prevrep, so the
+    #       chain pair rides the same explode — least/greatest then
+    #       orients every pair (within pairs are already ascending; only
+    #       the chain element arrives reversed).
+    # All plain built-ins: an earlier form built (id_a, id_b) STRUCTS
+    # via transform/filter higher-order lambdas, whose interpreted
+    # per-element evaluation cost ~4× the whole kernel at bench scale —
+    # slice + explode + least/greatest codegen instead (guide §4.1
+    # prefer built-ins; measured numbers in OPTIMIZATION_r12.md).
+    g1 = subs.select(
+        "_ids",
+        "_prevrep",
+        F.posexplode("_ids").alias("_i", "id_a"),
+    )
+    tail = F.slice(
+        F.col("_ids"),
+        F.col("_i") + F.lit(2),
+        F.greatest(F.lit(0), F.size("_ids") - F.col("_i") - F.lit(1)),
+    )
+    id_bs = F.when(
+        (F.col("_i") == 0) & F.col("_prevrep").isNotNull(),
+        F.concat(tail, F.array(F.col("_prevrep"))),
+    ).otherwise(tail)
+    pairs = (
+        g1.select("id_a", F.explode(id_bs).alias("id_b"))
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
         )
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
     )
-    # Chain pairs need no join: a representative (slot s*max_bucket,
-    # s >= 1) pairs with _prev = the id at slot (s-1)*max_bucket -- the
-    # previous representative; slot 0's _prev is NULL and drops (r11;
-    # the agg kernel folds the same pair into its generator instead).
-    chain = salted.filter(
-        F.col("_rep") & F.col("_prev").isNotNull()
-    ).select(
-        F.least(id_col, "_prev").alias("id_a"),
-        F.greatest(id_col, "_prev").alias("id_b"),
-    )
-    return within.unionByName(chain).distinct()
+    return pairs.distinct()
 
 
 def ann_lsh_topk(

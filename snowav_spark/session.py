@@ -62,6 +62,16 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+def default_master() -> str | None:
+    """``local[$SPARK_GRAFT_CPUS]``, or ``local[<cores this process may
+    use>]`` when that variable is unset or blank; None when
+    ``SPARK_MASTER`` names a cluster master."""
+    if "SPARK_MASTER" in os.environ:
+        return None
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    return f"local[{cpus or len(os.sched_getaffinity(0))}]"
+
+
 def get_spark(
     app_name: str = "snowav_spark",
     master: str | None = None,
@@ -70,14 +80,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured — on a real cluster the deploy
-    environment supplies the master and this argument is left None.
+    ``master`` defaults to :func:`default_master` — on a real cluster
+    the deploy environment supplies the master and this argument is
+    left None.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+    if master is None:
+        master = default_master()
     if master:
         builder = builder.master(master)
         # local mode: the one JVM hosts driver + all executor threads; the

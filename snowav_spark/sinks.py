@@ -574,12 +574,14 @@ def write_zordered(
     The key is layout-only — it is dropped from the written schema, so
     the files are plan-compatible with an unclustered write.
 
-    Measured (tools/probe_zorder.py, sf0.1 lineitem, 64 files, ~10% box
-    on l_partkey × l_suppkey): the 2-D box touches 9/64 row groups; a
-    suppkey-only predicate touches 19/64 where a partkey-sorted layout
-    touches 64/64.  The honest tradeoff: a partkey-only predicate reads
-    29/64 under z-order vs 7/64 under the dedicated sort — interleaving
-    spends leading-column resolution to buy it on every other column."""
+    Measured (SCALE.md round-7 z-order probe, sf0.1 lineitem, 64
+    files, ~10% box on l_partkey × l_suppkey; the script was removed,
+    see ``git show 7d3674f:tools/probe_zorder.py``): the 2-D box
+    touches 9/64 row groups; a suppkey-only predicate touches 19/64
+    where a partkey-sorted layout touches 64/64.  The honest tradeoff:
+    a partkey-only predicate reads 29/64 under z-order vs 7/64 under
+    the dedicated sort — interleaving spends leading-column resolution
+    to buy it on every other column."""
     keyed = df.withColumn("_zkey", morton_key(df, cols, bits_per_col))
     (
         keyed.repartitionByRange(n_files, "_zkey")

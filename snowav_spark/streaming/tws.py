@@ -75,9 +75,11 @@ class TopSpendersProcessor(StatefulProcessor):
         # migrates between executors.  ListState is transactional with
         # the MapState it accelerates.  Without the board, every batch
         # re-sorted the ENTIRE map per group, so per-batch latency grew
-        # linearly with lifetime distinct users (tools/probe_tws.py:
-        # 0.22 s → 0.72 s per batch as state grew 90k → 432k rows at 1M
-        # events; flat 0.26–0.33 s with the board).
+        # linearly with lifetime distinct users (SCALE.md, round-7
+        # stateful-streaming probe: 0.22 s → 0.72 s per batch as state
+        # grew 90k → 432k rows at 1M events; flat 0.26–0.33 s with the
+        # board; the script was removed, see
+        # `git show 7d3674f:tools/probe_tws.py`).
         self.board = handle.getListState(
             "board",
             StructType(

@@ -76,3 +76,51 @@ def test_assortativity_semantics(spark):
         "src", "dst",
     )
     assert {r.d for r in graph._degrees(e).collect()} == {2}
+
+
+# The generated DuckDB twins must share the Spark plan's exact hyperplane
+# literals: a drifted seed or RNG would silently re-bucket one engine and
+# fail the hash gate only at check time.
+
+
+def test_ann_lsh_sql_embeds_spark_planes():
+    """_ann_lsh_sql inlines the same 4x64 fixed-seed plane set the Spark
+    key passes to ann_lsh_topk, at full repr precision (shortest repr
+    round-trips each double exactly, so DuckDB parses the identical
+    IEEE value)."""
+    from snowav_spark import contract
+
+    planes = contract._ann_lsh_planes()
+    assert len(planes) == 4 and all(len(p) == 64 for p in planes)
+    # regenerating must be bit-stable (fresh PRNG per call)
+    again = contract._ann_lsh_planes()
+    assert planes == again
+    sql = contract._ann_lsh_sql()
+    for hp in planes:
+        assert repr(float(hp[0])) in sql
+        assert repr(float(hp[-1])) in sql
+    # bit weights 1,2,4,8 — one CASE per plane
+    for w in (1, 2, 4, 8):
+        assert f"THEN {w} ELSE 0 END" in sql
+    assert contract.ORACLE["q_ann_lsh"] == sql
+
+
+def test_embed_lsh_sql_embeds_spark_planes():
+    """_embed_lsh_sql inlines random_hyperplanes(10, 3, 64, 42) — the
+    identical fixed-seed float64 set dedup_pairs_lsh builds its bucket
+    matmul from — and keys candidates on the same (table, bucket)
+    equi-join."""
+    from snowav_spark import contract
+    from snowav_spark.ops import similarity
+
+    hps = similarity.random_hyperplanes(10, 3, 64, 42)
+    sql = contract._embed_lsh_sql(10, 3, 64, 42, 0.4)
+    for t in (0, 9):
+        for b in (0, 2):
+            assert repr(float(hps[t][b][0])) in sql
+            assert repr(float(hps[t][b][-1])) in sql
+    for t in range(10):
+        assert f"struct_pack(t := {t}," in sql
+    assert "a.k.t = c.k.t AND a.k.bk = c.k.bk" in sql
+    assert "cos_sim >= 0.4" in sql
+    assert contract.ORACLE["q_dedup_embed_lsh"] == sql

@@ -1727,18 +1727,19 @@ def test_salting_telemetry_runs_no_jobs_at_plan_construction(spark):
     assert plan.count() > 0  # and the plan itself still executes
 
 
-def test_salting_chain_pairs_exact(spark):
-    """The representative chain's exact pair set: consecutive
-    sub-bucket representatives only.  r11 replaced the reps-a ⋈ reps-b
-    join with a lag over the salting window (one less execution of the
-    whole salted subtree); this pins that the emitted chain is
-    byte-for-byte what the join produced — (rep_s, rep_{s+1}) per hot
-    bucket, nothing else across sub-buckets."""
+@pytest.mark.parametrize("n", [1, 250, 505])
+def test_salting_chain_pairs_exact(spark, n):
+    """The salted candidate stage's exact pair set on one bucket of n
+    identical vectors (cap 100): every pair inside a sub-bucket, plus a
+    chain linking CONSECUTIVE sub-bucket representatives only.  n=1 is
+    the singleton bucket (no pairs); n=250 is three sub-buckets and two
+    links; n=505 is six sub-buckets, the last of five ids, and five
+    links."""
     from pyspark.sql import functions as F
 
     from snowav_spark.ops import similarity
 
-    n, cap = 250, 100
+    cap = 100
     dups = spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.lit(1.0)] * 8).alias("embedding"),
@@ -1750,71 +1751,63 @@ def test_salting_chain_pairs_exact(spark):
             tables=1, bits=2, dim=8, max_bucket=cap,
         ).collect()
     }
-    # one bucket of 250 identical vectors -> sub-buckets [0,100),
-    # [100,200), [200,250); representatives are slots 0, 100, 200 (ids
-    # equal slots here: row_number orders by vec_id)
-    assert (0, 100) in pairs and (100, 200) in pairs
-    assert (0, 200) not in pairs  # chain links CONSECUTIVE reps only
-    assert (5, 105) not in pairs  # non-reps never pair across subs
-    within = {(a, b) for a, b in pairs if b - a < cap and a // cap == b // cap}
-    chain = {(0, 100), (100, 200)}
+    # sub-buckets are [0,100), [100,200), ...; representatives are
+    # slots 0, 100, 200, ... (ids equal slots here: row_number orders by
+    # vec_id)
+    within = {
+        (a, b) for a in range(n) for b in range(a + 1, n)
+        if a // cap == b // cap
+    }
+    chain = {(s - cap, s) for s in range(cap, n, cap)}
     assert pairs == within | chain
-
-
-def test_cobucket_agg_kernel_matches_join_kernel(spark):
-    """r12 single-consumer pair kernel (groupBy collect_list + nested
-    explodes, pipelined on the salting window's exchange) must emit
-    byte-for-byte the pair set of the legacy self-join form — including
-    when salting engages: within-sub-bucket pairs AND the
-    representative chain across sub-buckets (505 ids, cap 100 → six
-    sub-buckets, five chain links)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from snowav_spark.ops import similarity
-
-    d = spark.range(505).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.lit(1.0)] * 8).alias("embedding"),
-    )
-    out = {}
-    old = os.environ.get("SNOWAV_COBUCKET_KERNEL")
-    try:
-        for kern in ("agg", "join"):
-            os.environ["SNOWAV_COBUCKET_KERNEL"] = kern
-            out[kern] = {
-                (r.id_a, r.id_b)
-                for r in similarity.lsh_candidate_pairs(
-                    d, "vec_id", "embedding",
-                    tables=1, bits=2, dim=8, max_bucket=100,
-                ).collect()
-            }
-    finally:
-        if old is None:
-            os.environ.pop("SNOWAV_COBUCKET_KERNEL", None)
-        else:
-            os.environ["SNOWAV_COBUCKET_KERNEL"] = old
-    assert out["agg"] == out["join"]
-    assert (0, 100) in out["agg"] and (400, 500) in out["agg"]
-    assert len(out["agg"]) > 0
 
 
 def test_lsh_salting_recall_unchanged_on_normal_corpus(spark, sf_dir):
     """The default-on skew guard must be a no-op on a normal corpus
-    (buckets ≪ max_bucket): pairs identical with the guard on and
-    off."""
+    (buckets ≤ max_bucket): candidate and verified pairs at the
+    default cap are identical to the plain ``max_bucket=None``
+    self-join's."""
+    import inspect
+
+    import pyarrow.parquet as pq
+
     from snowav_spark.ops import similarity
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    on = similarity.dedup_pairs_lsh(
-        emb, "vec_id", "embedding", 0.4, max_bucket=4096
+    path = f"{sf_dir}/embeddings.parquet"
+    cap = inspect.signature(similarity.lsh_candidate_pairs).parameters[
+        "max_bucket"
+    ].default
+    # each vector sits in one bucket per table, so no bucket can hold
+    # more members than the table has rows
+    assert pq.read_metadata(path).num_rows <= cap
+
+    emb = spark.read.parquet(path)
+
+    def sym_diff(a, b, stage):
+        return (
+            a.exceptAll(b)
+            .unionByName(b.exceptAll(a))
+            .select(F.lit(stage).alias("stage"))
+        )
+
+    cand = sym_diff(
+        similarity.lsh_candidate_pairs(emb, "vec_id", "embedding"),
+        similarity.lsh_candidate_pairs(
+            emb, "vec_id", "embedding", max_bucket=None
+        ),
+        "candidates",
     )
-    off = similarity.dedup_pairs_lsh(
-        emb, "vec_id", "embedding", 0.4, max_bucket=None
+    verified = sym_diff(
+        similarity.dedup_pairs_lsh(
+            emb, "vec_id", "embedding", 0.4, max_bucket=cap
+        ),
+        similarity.dedup_pairs_lsh(
+            emb, "vec_id", "embedding", 0.4, max_bucket=None
+        ),
+        "verified",
     )
-    assert on.exceptAll(off).count() == 0
-    assert off.exceptAll(on).count() == 0
+    stray = cand.unionByName(verified).limit(5).collect()
+    assert not stray, stray
 
 
 def test_semdedup_pairs_exact_scores_and_recall(spark, sf_dir):

@@ -2,10 +2,12 @@
 
 Reads the most recent BENCH_HISTORY.jsonl runs at the CURRENT key set
 (same n_queries, same key names), requires at least MIN_RUNS of them,
-and writes BASELINE_KEYS.json: per-key MEDIAN seconds across those runs.
-That file becomes the regression bar for every key that has no explicit
-BASELINE.md row — bench.py re-times (and then reports as "drift") any
-key breaching 2x of its blessed median.
+and writes their per-key MEDIAN seconds to BASELINE_KEYS.json under
+``by_cpus[<the runs' core count>]``, keeping the other core counts'
+sections blessed at the same scale factor.  Those medians become the
+regression bar for every key that has no explicit BASELINE.md row —
+bench.py re-times (and then reports as "drift") any key breaching 2x of
+its blessed median at the run's sf and core count.
 
 Usage:
     python tools/bless_baseline.py            # bless from last >=3 runs
@@ -47,86 +49,54 @@ def main() -> int:
     current_keys = set(runs[-1]["queries"])
     usable = [r for r in runs if set(r["queries"]) == current_keys]
     # ... and at the newest run's CORE COUNT: medians mixing a 32-core
-    # and an 8-core run would be bars for neither configuration.  Runs
-    # predating the recorded-cpus field are excluded once any run in
-    # the window records one (can't verify they match).
-    newest_cpus = usable[-1].get("cpus") if usable else None
-    if newest_cpus is not None:
-        usable = [r for r in usable if r.get("cpus") == newest_cpus]
+    # and an 8-core run would be bars for neither configuration.
+    newest_cpus = usable[-1].get("cpus")
+    if newest_cpus is None:
+        print("the newest history run records no cpus", file=sys.stderr)
+        return 1
+    usable = [r for r in usable if r.get("cpus") == newest_cpus]
     usable = usable[-args.runs:]
     if len(usable) < MIN_RUNS:
         print(
             f"only {len(usable)} history runs at the current "
-            f"{len(current_keys)}-key set; need >= {MIN_RUNS}. "
-            "Run `python bench.py` again and re-bless.",
+            f"{len(current_keys)}-key set and cpus={newest_cpus}; need "
+            f">= {MIN_RUNS}. Run `python bench.py` again and re-bless.",
             file=sys.stderr,
         )
         return 1
 
-    keys = {
-        k: round(statistics.median(r["queries"][k] for r in usable), 4)
-        for k in sorted(current_keys)
-    }
-    out = {
+    sf = usable[-1].get("sf")
+    out_path = os.path.join(REPO, "BASELINE_KEYS.json")
+    by_cpus: dict = {}
+    if os.path.exists(out_path):
+        with open(out_path) as f:
+            prev = json.load(f)
+        if prev.get("sf") == sf:
+            by_cpus = dict(prev.get("by_cpus") or {})
+    by_cpus[str(int(newest_cpus))] = {
         "blessed_utc": datetime.datetime.now(
             datetime.timezone.utc
         ).isoformat(timespec="seconds"),
         "n_runs": len(usable),
         "git_heads": [r.get("git_head", "") for r in usable],
         "run_utcs": [r.get("utc", "") for r in usable],
-        "sf": usable[-1].get("sf"),
-        # Core count the medians were measured at: bench.py skips these
-        # bars when its own $SPARK_GRAFT_CPUS differs — a lower-core
-        # scaling run would breach 32-core bars on every parallel-heavy
-        # key and re-time them all.  Stamped from the NEWEST run only
-        # (ADVICE r11): when that run predates the cpus field, no
-        # uniformity was enforced above, and scanning backwards for any
-        # older run's value would mislabel a mixed-core median as
-        # measured at that core count — null is the honest value there.
-        "cpus": newest_cpus,
-        "rule": "bench.py flags any key whose best-of-3 exceeds "
-                "max(2 * median_seconds, 0.05s); BASELINE.md rows "
-                "take precedence where they exist",
-        "keys": keys,
+        "keys": {
+            k: round(statistics.median(r["queries"][k] for r in usable), 4)
+            for k in sorted(current_keys)
+        },
     }
-    out_path = os.path.join(REPO, "BASELINE_KEYS.json")
-    # Per-core-count sections (r12, VERDICT r11 item 7): keep every
-    # previously blessed core count's bars under "by_cpus" and add /
-    # replace this blessing's — the driver's lower-core scaling run then
-    # gets its own honest drift bars instead of skipping the gate.  The
-    # top level stays the newest blessing (back-compat with readers that
-    # predate the section).
-    by_cpus: dict = {}
-    if os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                prev = json.load(f)
-            by_cpus = dict(prev.get("by_cpus") or {})
-            if not by_cpus and prev.get("cpus") is not None:
-                by_cpus[str(int(prev["cpus"]))] = {
-                    k: prev[k]
-                    for k in (
-                        "blessed_utc", "n_runs", "git_heads",
-                        "run_utcs", "keys",
-                    )
-                    if k in prev
-                }
-        except Exception:
-            by_cpus = {}
-    if newest_cpus is not None:
-        by_cpus[str(int(newest_cpus))] = {
-            k: out[k]
-            for k in (
-                "blessed_utc", "n_runs", "git_heads", "run_utcs", "keys"
-            )
-        }
-        out["by_cpus"] = by_cpus
+    out = {
+        "sf": sf,
+        "rule": "bench.py flags any key whose best-of-3 exceeds "
+                "max(2 * median_seconds, 0.05s) of by_cpus[<its cpus>]; "
+                "BASELINE.md rows take precedence where they exist",
+        "by_cpus": by_cpus,
+    }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=False)
     print(
-        f"blessed {len(keys)} keys from {len(usable)} runs "
-        f"({', '.join(out['git_heads'])}) at cpus={newest_cpus} "
-        f"-> {out_path} (by_cpus: {sorted(by_cpus)})"
+        f"blessed {len(current_keys)} keys from {len(usable)} runs at "
+        f"cpus={newest_cpus} -> {out_path} (by_cpus: {sorted(by_cpus)})"
     )
     return 0
 

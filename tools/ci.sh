@@ -1,12 +1,14 @@
 #!/bin/sh
-# Full local verification: unit/integration tests, then the DuckDB oracle
-# gate at BOTH sf0.01 and sf0.1 (ulp-boundary flips are scale-dependent),
-# with the --permute summation-order re-run at sf0.01, then the plan
-# audit, then the timestamp-sensitive keys once more under a non-UTC
-# host+JVM timezone (LTZ leakage probe).
+# Full local verification: unit/integration tests and the perfbench
+# smoke test, then the DuckDB oracle gate at BOTH sf0.01 and sf0.1
+# (ulp-boundary flips are scale-dependent), with the --permute
+# summation-order re-run at sf0.01, then the plan audit, then the
+# timestamp-sensitive keys once more under a non-UTC host+JVM timezone
+# (LTZ leakage probe).
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+python -m pytest perfbench/test_smoke.py -q
 python tools/check.py --permute
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/check.py
 python tools/audit_plans.py
