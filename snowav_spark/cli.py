@@ -849,9 +849,8 @@ def main(argv: list[str] | None = None) -> int:
     else:
         # no topo supplied: derive grid dims from the first grid and use
         # the synthetic gradient topo (tests / demo runs)
-        ny = raster.agg({"y": "max"}).collect()[0][0] + 1
-        nx = raster.agg({"x": "max"}).collect()[0][0] + 1
-        topo = synthetic_topo(spark, ny, nx, spec.edges)
+        ymax, xmax = raster.agg(F.max("y"), F.max("x")).first()
+        topo = synthetic_topo(spark, ymax + 1, xmax + 1, spec.edges)
 
     store = pipeline.run(
         spark, spec, raster, topo, incremental=extras["incremental"]

@@ -25,7 +25,11 @@ so citations point into the public USDA-ARS-NWRC/snowav package).
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2796,6 +2800,24 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bm25_scores(docs, "doc_id", "text", ["join", "vector", "scan"])
 
 
+# Every persisted index layout of this process lives under ONE temp
+# directory, created on first use and removed when the interpreter exits.
+# Per-process: two processes benchmarking the same sf_dir must not race on
+# one layout (a static-overwrite rebuild would delete it under the other's
+# mid-flight scan).
+_INDEX_DIR: str | None = None
+
+
+def _index_path(kind: str, sf_dir: str) -> str:
+    """Path of this process's ``kind`` index layout for ``sf_dir``."""
+    global _INDEX_DIR
+    if _INDEX_DIR is None:
+        _INDEX_DIR = tempfile.mkdtemp(prefix="snowav_idx_")
+        atexit.register(shutil.rmtree, _INDEX_DIR, ignore_errors=True)
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
+    return os.path.join(_INDEX_DIR, f"{kind}_{tag}")
+
+
 # q_text_index path memo, keyed by sf_dir: like _IVFPQ_PATHS, the
 # inverted index is built once and persisted — the bench measures the
 # per-query at-rest retrieval cost (pruned bucket scan + BM25 + top-k),
@@ -2845,14 +2867,7 @@ def q_text_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters), never the corpus."""
     path = _TEXT_INDEX_PATHS.get(sf_dir)
     if path is None:
-        import hashlib
-        import tempfile
-
-        # pid-salted: two processes benchmarking the same sf_dir must
-        # not race on one directory (a static-overwrite rebuild would
-        # delete it under the other's mid-flight scan)
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/snowav_textidx_{tag}_{os.getpid()}"
+        path = _index_path("textidx", sf_dir)
         docs = load_table(spark, sf_dir, "documents")
         text.build_text_index(docs, "doc_id", "text", path, n_buckets=16)
         _TEXT_INDEX_PATHS[sf_dir] = path
@@ -2915,13 +2930,7 @@ def q_text_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is the full filtered score table, bit-identical."""
     path = _TEXT_META_PATHS.get(sf_dir)
     if path is None:
-        import hashlib
-        import tempfile
-
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        path = (
-            f"{tempfile.gettempdir()}/snowav_textidxm_{tag}_{os.getpid()}"
-        )
+        path = _index_path("textidxm", sf_dir)
         docs = load_table(spark, sf_dir, "documents")
         text.build_text_index(
             docs, "doc_id", "text", path, n_buckets=16,
@@ -4208,15 +4217,10 @@ def q_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the float corpus is only touched by the broadcast-semi-join re-rank
     of ~4·k candidates).  Tests pin self-hit at rank 0, re-ranked recall
     vs the exact twin, and nprobe=n_cells full-probe behavior."""
-    import hashlib
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = _IVFPQ_PATHS.get(sf_dir)
     if path is None:
-        # pid-salted: see _TEXT_INDEX_PATHS — no cross-process races
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/snowav_ivfpq_{tag}_{os.getpid()}"
+        path = _index_path("ivfpq", sf_dir)
         quantize.build_ivfpq_index(
             emb, "vec_id", "embedding", path,
             n_cells=8, m=8, k=8, iters=1, dim=64,
@@ -4280,14 +4284,10 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ivfpq_ann key and the pruned-probe recall tests in
     tests/test_quantize.py.  Plan audit asserts BOTH the cell
     PartitionFilters and the pushed label filter."""
-    import hashlib
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = _IVFPQ_META_PATHS.get(sf_dir)
     if path is None:
-        tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/snowav_ivfpqm_{tag}_{os.getpid()}"
+        path = _index_path("ivfpqm", sf_dir)
         quantize.build_ivfpq_index(
             emb, "vec_id", "embedding", path,
             n_cells=8, m=8, k=8, iters=1, dim=64, metadata=("label",),
@@ -8618,12 +8618,8 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     cold build, then leaves the memos populated — the suite's warm
     runs reuse exactly these artifacts, so the measured queries stay
     search-only as documented."""
-    import hashlib
-    import tempfile
     import time as _time
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    tmp = tempfile.gettempdir()
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     out: dict[str, float] = {}
@@ -8642,7 +8638,7 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     _PQ_CODES[(spark, sf_dir)] = codes
 
     t0 = _time.perf_counter()
-    path = f"{tmp}/snowav_ivfpq_{tag}_{os.getpid()}"
+    path = _index_path("ivfpq", sf_dir)
     ivf_cents, ivf_cb = quantize.build_ivfpq_index(
         emb, "vec_id", "embedding", path,
         n_cells=8, m=8, k=8, iters=1, dim=64,
@@ -8658,7 +8654,7 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     # visible in the phase probe).  Reuse them; only the cell
     # assignment + residual encode passes differ per layout.
     t0 = _time.perf_counter()
-    path = f"{tmp}/snowav_ivfpqm_{tag}_{os.getpid()}"
+    path = _index_path("ivfpqm", sf_dir)
     quantize.build_ivfpq_index(
         emb, "vec_id", "embedding", path,
         n_cells=8, m=8, k=8, iters=1, dim=64, metadata=("label",),
@@ -8668,13 +8664,13 @@ def build_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     _IVFPQ_META_PATHS[sf_dir] = path
 
     t0 = _time.perf_counter()
-    path = f"{tmp}/snowav_textidx_{tag}_{os.getpid()}"
+    path = _index_path("textidx", sf_dir)
     text.build_text_index(docs, "doc_id", "text", path, n_buckets=16)
     out["text_index_build"] = round(_time.perf_counter() - t0, 4)
     _TEXT_INDEX_PATHS[sf_dir] = path
 
     t0 = _time.perf_counter()
-    path = f"{tmp}/snowav_textidxm_{tag}_{os.getpid()}"
+    path = _index_path("textidxm", sf_dir)
     text.build_text_index(
         docs, "doc_id", "text", path, n_buckets=16,
         doc_meta=("lang", "source"),

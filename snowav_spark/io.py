@@ -138,6 +138,15 @@ def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def hadoop_glob_matches(spark: SparkSession, pattern: str) -> bool:
+    """True when the Hadoop glob ``pattern`` matches at least one path
+    (same FileSystem API and miss-path quietness as
+    :func:`hadoop_path_exists`)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.globStatus(jpath))
+
+
 def read_pruned_partitions(
     spark: SparkSession, path: str, col: str, values
 ) -> DataFrame:

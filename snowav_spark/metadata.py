@@ -15,6 +15,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from snowav_spark.io import hadoop_path_exists, local_df
+
 # The reference's default variable → unit mapping (CoreConfig defaults;
 # SURVEY §1.2: VariableUnits maps variable → 'in', 'TAF', 'kg/m³', 'MJ'…).
 DEFAULT_UNITS: list[tuple[str, str, str]] = [
@@ -56,10 +58,9 @@ class RunMetadataStore:
             tzinfo=None
         )
         row = [(run_id, run_name, now, json.dumps(config, sort_keys=True))]
-        df = self.spark.createDataFrame(
-            row, "run_id string, run_name string, created_ts timestamp_ntz, config string"
+        local_df(self.spark, row, self._SCHEMA).write.mode("append").parquet(
+            self.path
         )
-        df.write.mode("append").parquet(self.path)
 
     _SCHEMA = (
         "run_id string, run_name string, created_ts timestamp_ntz, "
@@ -70,10 +71,9 @@ class RunMetadataStore:
         """All recorded runs; EMPTY (not PATH_NOT_FOUND) before the first
         record() — the same first-use guard ResultsStore.append_missing
         applies, so the two stores behave alike."""
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        if not hadoop_path_exists(self.spark, self.path):
             return self.spark.createDataFrame([], self._SCHEMA)
+        return self.spark.read.parquet(self.path)
 
     def latest(self, run_name: str):
         """Most recent run row for a name (max_by on created_ts)."""

@@ -89,14 +89,6 @@ def zonal_stats(
 # Unit conversions the reference applies at compute time
 # (ref:snowav/framework/process.py; SURVEY.md §1.3).
 MM_TO_IN = 0.03937
-M_TO_IN = 39.37
-# mm over one pixel → acre-feet: mm·px → m³ → TAF; pixel area parameterized.
-M3_TO_TAF = 8.107e-7
-
-
-def swe_volume_taf(depth_mm: Column, pixel_area_m2: float) -> Column:
-    """SWE volume in thousand-acre-feet from a per-pixel depth in mm."""
-    return depth_mm / 1000.0 * F.lit(pixel_area_m2) * F.lit(M3_TO_TAF) * 1000.0
 
 
 def depth_in(depth_mm: Column) -> Column:

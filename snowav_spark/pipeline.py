@@ -6,8 +6,9 @@ per-day/per-basin/per-band masked numpy loop → SQL insert → figures/report
 from collect() frames.  The in-memory day loop is the reference's
 scalability wall; here the whole thing is
 
-    tall raster frame → broadcast topo join → digitize → ROLLUP agg with
-    unit conversion → partitioned write (the ONLY action)
+    tall raster frame → broadcast topo join → digitize → one
+    grouping-sets agg (per band + basin total) → partitioned write (the
+    ONLY action)
 
 so Catalyst fuses it and Spark spills instead of dying when a water year
 exceeds RAM.
@@ -15,7 +16,7 @@ exceeds RAM.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,10 +34,8 @@ class PipelineSpec:
     run_id: str
     edges: list[float]  # elevation band edges (ref: CoreConfig 'edges')
     basins: list[str]  # plotorder
-    pixel_area_m2: float = 2500.0  # 50 m grid default
     variables: tuple[str, ...] = ("swe_mm", "depth_m", "swi_mm")
     store_path: str = "/tmp/snowav_spark_results"
-    depth_factor: float = banded.MM_TO_IN
 
 
 def process(
@@ -50,27 +49,25 @@ def process(
     Returns long-format results rows (run_id, date, basin_id, variable,
     band, value) with the reference's semantics: banded sums per basin
     per day per variable, plus the synthetic whole-basin 'total' band
-    (band = -1), values unit-converted at compute time.
+    (band = -1).  Both come from ONE grouping-sets aggregate over one
+    raster scan; ``grouping(band)`` marks the total rows.
     """
-    joined = raster.join(F.broadcast(topo), ["y", "x"])
-    band = banded.digitize(F.col("elevation"), spec.edges)
-    per_band = joined.groupBy(
-        "date", "basin_id", "variable", band.alias("band")
-    ).agg(F.round(F.sum("value"), 6).alias("value"))
-    totals = (
-        joined.groupBy("date", "basin_id", "variable")
-        .agg(F.round(F.sum("value"), 6).alias("value"))
-        .withColumn("band", F.lit(-1))
+    keys = ["date", "basin_id", "variable"]
+    joined = raster.join(F.broadcast(topo), ["y", "x"]).withColumn(
+        "band", banded.digitize(F.col("elevation"), spec.edges)
     )
-    results = per_band.unionByName(totals).select(
+    agg = joined.groupingSets([[*keys, "band"], keys], *keys, "band").agg(
+        F.round(F.sum("value"), 6).alias("value"),
+        F.grouping("band").alias("is_total"),
+    )
+    return agg.select(
         F.lit(spec.run_id).alias("run_id"),
-        F.col("date"),
-        "basin_id",
-        "variable",
-        "band",
+        *keys,
+        F.when(F.col("is_total") == 1, F.lit(-1))
+        .otherwise(F.col("band"))
+        .alias("band"),
         "value",
     )
-    return results
 
 
 def run(
@@ -121,8 +118,8 @@ def stream_run(
     re-invoked batch.  The streaming raster source (sources/
     raster_source.py) emits only the grid files that appeared since the
     checkpointed offset; each micro-batch runs the SAME lazy plan as the
-    batch pipeline (broadcast topo join → banded ROLLUP agg) and lands
-    via the store's partition-scoped MERGE (key = the full results
+    batch pipeline (broadcast topo join → banded grouping-sets agg) and
+    lands via the store's partition-scoped MERGE (key = the full results
     grain), NOT a bare partition overwrite: when one day's variables
     split across micro-batches (swe arrives, the trigger fires, depth
     arrives), the second batch must not clobber the first batch's rows

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-RESULTS_COLS = ("run_id", "date", "basin_id", "variable", "band", "value")
+from snowav_spark.io import hadoop_glob_matches
 
 
 class ResultsStore:
@@ -33,6 +33,7 @@ class ResultsStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._schema = None  # inferred by the first read()
 
     def write(self, df: DataFrame, mode: str = "overwrite") -> None:
         """Idempotent write: with the engine's dynamic partitionOverwrite
@@ -46,7 +47,11 @@ class ResultsStore:
         )
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The store as a DataFrame.  The schema is inferred from a
+        parquet footer once; every read still lists the partitions."""
+        if self._schema is None:
+            self._schema = self.spark.read.parquet(self.path).schema
+        return self.spark.read.schema(self._schema).parquet(self.path)
 
     def existing_dates(self, run_id: str) -> DataFrame:
         """Distinct dates already present for a run — partition-column-only
@@ -58,20 +63,22 @@ class ResultsStore:
             .distinct()
         )
 
+    def _has_partitions(self) -> bool:
+        """First-use guard: True once a write has landed a partition.
+        Writing an empty frame leaves a directory with none, and
+        ``spark.read.parquet`` cannot infer a schema from that."""
+        return hadoop_glob_matches(self.spark, f"{self.path}/run_id=*")
+
     def append_missing(self, df: DataFrame, run_id: str) -> None:
-        """EP2 incremental semantics: append only rows whose date is not
-        yet in the store for this run (anti-join), then write those
-        partitions.  Re-running the same day twice is a no-op."""
-        try:
-            existing = self.existing_dates(run_id)
-        except Exception:
-            # first write — nothing to skip
-            self.write(df)
-            return
-        fresh = df.join(existing, "date", "left_anti")
-        if fresh.limit(1).count() == 0:
-            return
-        self.write(fresh)
+        """EP2 incremental semantics: write only the rows whose date is
+        not yet in the store for this run.  The anti-join against the
+        stored dates runs inside the write, which is the only action:
+        when every date is already stored the write is empty, and an
+        empty dynamic partition overwrite replaces no partition, so
+        re-running the same day twice is a no-op."""
+        if self._has_partitions():
+            df = df.join(self.existing_dates(run_id), "date", "left_anti")
+        self.write(df)
 
     def merge_upsert(self, updates: DataFrame, keys: tuple[str, ...]) -> None:
         """PARTITION-SCOPED merge on the parquet store: within the
@@ -100,11 +107,10 @@ class ResultsStore:
         prunes on), then an anti-join on the business keys drops the
         superseded rows, union with the updates, and dynamic partition
         overwrite writes back just those partitions."""
-        try:
-            store = self.read()
-        except Exception:
+        if not self._has_partitions():
             self.write(updates)
             return
+        store = self.read()
         parts = updates.select("run_id", "date").distinct()
         touched = store.join(F.broadcast(parts), ["run_id", "date"], "semi")
         survivors = touched.join(
@@ -123,22 +129,21 @@ class ResultsStore:
         """The reference's ``collect()`` read path: filter the store by
         (run, variable, date range) — all pruned at the scan — and pivot
         bands × basins into a driver-sized pandas report frame."""
-        df = (
-            self.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("variable") == variable)
-                & (F.col("date") >= F.lit(start))
-                & (F.col("date") < F.lit(end))
-            )
+        df = self.read().filter(
+            (F.col("run_id") == run_id)
+            & (F.col("variable") == variable)
+            & (F.col("date") >= F.lit(start))
+            & (F.col("date") < F.lit(end))
         )
-        wide = (
-            df.groupBy("band")
-            .pivot("basin_id", basins)
-            .agg(F.round(F.sum("value"), 6))
-            .orderBy("band")
+        # pivot as one conditional sum per basin (pivot() shuffles twice);
+        # the few band rows sort on the driver, not in a range shuffle
+        wide = df.groupBy("band").agg(*(
+            F.round(F.sum(F.when(F.col("basin_id") == b, F.col("value"))), 6)
+            .alias(b) for b in basins
+        ))
+        return wide.toPandas().sort_values(
+            "band", na_position="first", ignore_index=True
         )
-        return wide.toPandas()
 
 
 def write_bucketed(

@@ -124,3 +124,36 @@ def test_embed_lsh_sql_embeds_spark_planes():
     assert "a.k.t = c.k.t AND a.k.bk = c.k.bk" in sql
     assert "cos_sim >= 0.4" in sql
     assert contract.ORACLE["q_dedup_embed_lsh"] == sql
+
+
+def test_index_paths_share_one_dir_removed_at_exit(monkeypatch, tmp_path):
+    """Every persisted index layout of a process lives under one
+    ``snowav_idx_`` temp directory; the exit hook removes it whole."""
+    import atexit
+    import os
+
+    from snowav_spark import contract
+
+    hooks = []
+    monkeypatch.setattr(contract, "_INDEX_DIR", None)
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *a, **k: hooks.append((fn, a, k))
+    )
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(contract.tempfile, "tempdir", None)
+    paths = [
+        contract._index_path(kind, sf)
+        for kind in ("ivfpq", "ivfpqm", "textidx", "textidxm")
+        for sf in ("/data/sf0.01", "/data/sf0.1")
+    ]
+    assert len(set(paths)) == len(paths)
+    (root,) = {os.path.dirname(p) for p in paths}
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith("snowav_idx_")
+    for p in paths:
+        os.makedirs(p)
+        open(os.path.join(p, "part-0.parquet"), "w").close()
+    assert len(hooks) == 1  # registered once, on first use
+    fn, args, kwargs = hooks[0]
+    fn(*args, **kwargs)
+    assert not os.path.exists(root)

@@ -113,6 +113,69 @@ def test_incremental_append_skips_existing(store, spark):
     assert after.count() == n_before + n_new_day
 
 
+def test_incremental_rerun_of_stored_dates_leaves_store_untouched(store, spark):
+    """EP2 re-offering only dates already stored writes an empty frame:
+    under dynamic partition overwrite that replaces no partition, so
+    every store file keeps its name, size and mtime."""
+    import os
+
+    st, spec = store
+
+    def listing():
+        return {
+            os.path.relpath(os.path.join(root, f), spec.store_path): (
+                os.stat(os.path.join(root, f)).st_size,
+                os.stat(os.path.join(root, f)).st_mtime_ns,
+            )
+            for root, _dirs, files in os.walk(spec.store_path)
+            for f in files
+        }
+
+    before = listing()
+    raster = ingest.synthetic_raster(spark, NY, NX, DATES, VARS)
+    topo = ingest.synthetic_topo(spark, NY, NX, EDGES)
+    pipeline.run(
+        spark, spec, raster, topo, incremental=True, record_metadata=False
+    )
+    assert listing() == before
+
+
+def test_store_usable_after_empty_first_write(spark, tmp_path):
+    """An empty first write leaves a store directory without partitions;
+    the next append_missing / merge_upsert must still land its rows."""
+    schema = (
+        "run_id string, date date, basin_id string, variable string, "
+        "band int, value double"
+    )
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame(
+        [("r1", datetime.date(2024, 1, 1), "A", "v", 0, 1.0)], schema
+    )
+    for i, land in enumerate((
+        lambda st: st.append_missing(one, "r1"),
+        lambda st: st.merge_upsert(one, keys=("basin_id", "variable", "band")),
+    )):
+        st = ResultsStore(spark, str(tmp_path / f"store{i}"))
+        st.append_missing(empty, "r1")
+        assert not st._has_partitions()
+        land(st)
+        assert st.read().count() == 1
+
+
+def test_read_reuses_schema_and_sees_new_partitions(spark, tmp_path):
+    """read() infers the schema once; later reads still list partitions
+    written after the first read."""
+    st = ResultsStore(spark, str(tmp_path / "schema_store"))
+    cols = ["run_id", "date", "basin_id", "variable", "band", "value"]
+    rows = [("r1", datetime.date(2024, 1, d), "A", "v", 0, float(d)) for d in (1, 2)]
+    st.write(spark.createDataFrame(rows[:1], cols))
+    first = st.read()
+    st.write(spark.createDataFrame(rows[1:], cols))
+    second = st.read()
+    assert second.schema == first.schema
+    assert sorted(r.value for r in second.collect()) == [1.0, 2.0]
+
+
 def test_merge_upsert_replaces_matches_keeps_rest(spark, tmp_path):
     from snowav_spark.sinks import ResultsStore
 

@@ -57,6 +57,13 @@ def test_feeds_pipeline(spark, grid_dir, tmp_path):
         basins=["basin_A", "basin_B"],
         store_path=str(tmp_path / "store"),
     )
+    # per-band and total rows come from ONE aggregate over ONE scan
+    plan = (
+        pipeline.process(spec, raster, topo)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("BatchScan snowav_raster") == 1, plan
+    assert plan.count("Expand") == 1, plan
     store = pipeline.run(spark, spec, raster, topo)
     out = store.read()
     assert out.filter(F.col("band") == -1).count() > 0
